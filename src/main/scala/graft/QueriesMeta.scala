@@ -28,23 +28,34 @@ object QueriesMeta {
     */
   private val StreamStateBytesPerPartition = 256L * 1024
 
+  /** State-store partitions when the size probe fails: the round-8 sweep's
+    * optimum, capped at the session's parallelism (a silent 1 would
+    * serialize every stateful micro-batch into one task).
+    */
+  private val StreamStateFallbackPartitions = 8L
+
+  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
   /** Cloned session for the stateful streaming gate keys with the
     * state-store partition count derived from the source parquet's size
     * (see [[StreamStateBytesPerPartition]]), clamped to
-    * [1, defaultParallelism].
+    * [1, defaultParallelism]. A failed probe logs a warning and falls back
+    * to min([[StreamStateFallbackPartitions]], defaultParallelism).
     */
-  private def streamStateSession(sOuter: SparkSession, dir: String,
+  private[graft] def streamStateSession(sOuter: SparkSession, dir: String,
       table: String): SparkSession = {
     val s = sOuter.newSession()
-    val bytes =
-      try {
-        val hp = new org.apache.hadoop.fs.Path(s"$dir/$table.parquet")
-        hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-          .getContentSummary(hp).getLength
-      } catch { case scala.util.control.NonFatal(_) => 0L }
-    val parts = math.max(1L,
-      math.min(s.sparkContext.defaultParallelism.toLong,
+    val cap = s.sparkContext.defaultParallelism.toLong
+    val path = s"$dir/$table.parquet"
+    val parts = Tables.sourceBytes(s, path) match {
+      case scala.util.Success(bytes) => math.max(1L, math.min(cap,
         (bytes + StreamStateBytesPerPartition - 1) / StreamStateBytesPerPartition))
+      case scala.util.Failure(e) =>
+        val fallback = math.min(StreamStateFallbackPartitions, cap)
+        log.warn(s"size probe of $path failed ($e); using $fallback " +
+          "state-store partitions")
+        fallback
+    }
     s.conf.set("spark.sql.shuffle.partitions", parts.toString)
     s
   }

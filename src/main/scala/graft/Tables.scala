@@ -28,6 +28,20 @@ object Tables {
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 
+  /** Size probe shared by [[fanOut]] and the streaming state-store sizing:
+    * the bytes under `path`, or the probe's failure. getContentSummary sums
+    * LEAF file bytes (one RPC, recursive), so a directory-layout parquet
+    * reports its real data size; getFileStatus would return the directory
+    * entry's own length (~0) for multi-file tables and mis-read a huge
+    * table as "one split".
+    */
+  private[graft] def sourceBytes(spark: SparkSession, path: String): scala.util.Try[Long] =
+    scala.util.Try {
+      val hp = new org.apache.hadoop.fs.Path(path)
+      hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .getContentSummary(hp).getLength
+    }
+
   /** Cores-adaptive scan fan-out (optimization guide §2.5 "input skew:
     * one huge unsplittable file … repartition immediately after the
     * read", §6 input split size): the fixture parquets are written as a
@@ -57,18 +71,10 @@ object Tables {
   def fanOut(spark: SparkSession, df: DataFrame, path: String): DataFrame = {
     val p = spark.sparkContext.defaultParallelism
     if (p <= 1) return df
-    // getContentSummary sums LEAF file bytes (one RPC, recursive), so a
-    // directory-layout parquet reports its real data size; the former
-    // getFileStatus returned the directory entry's own length (~0) for
-    // multi-file tables, which would mis-read a huge table as "one
-    // split" and add a full-input round-robin shuffle at exactly the
-    // scale where the fan-out must self-disable
-    val bytes =
-      try {
-        val hp = new org.apache.hadoop.fs.Path(path)
-        hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .getContentSummary(hp).getLength
-      } catch { case scala.util.control.NonFatal(_) => return df }
+    val bytes = sourceBytes(spark, path) match {
+      case scala.util.Success(b) => b
+      case scala.util.Failure(_) => return df
+    }
     val maxSplit = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
       spark.conf.get("spark.sql.files.maxPartitionBytes", "128MB"))
     val naturalSplits = math.max(1L, (bytes + maxSplit - 1) / maxSplit)

@@ -30,7 +30,7 @@ object Incremental {
   case object Truncated extends BoundaryMode
   case object OverlapReload extends BoundaryMode
 
-  val maxFrame = 200 // longest ROWS frame in the indicator set (SMA-200)
+  val maxFrame = 200 // longest lookback in the indicator set (SMA-200)
 
   private val wmSchema = StructType(Seq(
     StructField("symbol", StringType, nullable = false),

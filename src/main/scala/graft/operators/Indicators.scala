@@ -5,13 +5,22 @@ import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import scala.collection.immutable.ListMap
+
 /** Technical-indicator engine — the analytical core of the reference
   * (`/root/reference/spark-job/etl_job.py:271-356`, W1-W10 in SURVEY §2.3).
   *
-  * All indicators are built-in window aggregates + column arithmetic — no
-  * UDFs anywhere (SURVEY §2.9) — so the whole surface stays inside
-  * whole-stage codegen and Catalyst's `ExtractWindowExpressions` groups
-  * same-frame functions into shared WindowExec nodes.
+  * The 15 reference indicators are one native window aggregate plus
+  * column arithmetic: [[org.apache.spark.sql.graftnative.IndicatorStateAgg]]
+  * keeps ring buffers of the recent closes, macd, gains and losses and
+  * emits every frame-dependent value of a row in one struct, so the whole
+  * pipeline plans to ONE WindowExec over one running frame. Built-in
+  * bounded ROWS frames would cost more: Spark's sliding frame re-aggregates
+  * the whole frame on every row (336 buffered-row visits per output row
+  * across the 8 frames, 200 of them for SMA-200), and the 8 frames stacked
+  * 4 WindowExecs. No UDFs (SURVEY §2.9): the aggregate is a Catalyst
+  * expression, and the struct reads and arithmetic above the window stay
+  * in whole-stage codegen.
   *
   * Reference quirks preserved on purpose (SURVEY §7.4.2):
   *   - "EMA" 12/26 is an SMA approximation (`etl_job.py:294-295`);
@@ -21,8 +30,8 @@ import org.apache.spark.sql.types._
   *   - Bollinger uses sample stddev (`etl_job.py:301`).
   *
   * Scale notes (100 TB): the window partitions by `symbol`; one symbol's
-  * full history lands in one task. All frames except OBV are bounded ROWS
-  * frames ≤200 rows, so the chunked overlap-and-trim scheme (process date
+  * full history lands in one task. Every lookback except OBV is bounded
+  * (≤200 rows), so the chunked overlap-and-trim scheme (process date
   * ranges with 199-row tails, drop warm-up rows) keeps partitions bounded;
   * OBV decomposes into per-chunk prefix sums + cumulative chunk offsets
   * (SURVEY §4 skew row). At testdata scale plain partitioning suffices.
@@ -47,59 +56,47 @@ object Indicators {
     "rsi", "obv", "day_change_pct", "week_change_pct", "month_change_pct")
 
   /** Reference-faithful indicator pipeline (`etl_job.py:271-356`): plain
-    * double-typed window avgs/stddev. This is the production path; the
+    * double-typed averages and stddev. This is the production path; the
     * oracle-deterministic variants live in [[graft.Queries]].
+    *
+    * Every frame-dependent value comes from ONE native window aggregate,
+    * [[org.apache.spark.sql.graftnative.IndicatorStateAgg]], over a running
+    * frame of `w`: one WindowExec, one pass, bit-identical to the built-in
+    * `avg`/`stddev`/`sum`/`lag` window functions it replaces (pinned by
+    * IndicatorKernelSpec). The row-local arithmetic — histogram, bands,
+    * rs/rsi, percent changes — stays in Catalyst expressions over the
+    * struct, so null and ANSI divide semantics are Spark's own. `close`
+    * must be double (see [[Clean.castNumeric]]); `volume` long, int, float
+    * or double.
     */
   def withIndicators(df: DataFrame, w: WindowSpec): DataFrame = {
+    val st = "_indicator_state"
+    def f(field: String): Column = col(st).getField(field)
     val close = col("close")
-    var d = df
-      .withColumn("sma_5", avg(close).over(w.rowsBetween(-4, 0)))
-      .withColumn("sma_20", avg(close).over(w.rowsBetween(-19, 0)))
-      .withColumn("sma_50", avg(close).over(w.rowsBetween(-49, 0)))
-      .withColumn("sma_200", avg(close).over(w.rowsBetween(-199, 0)))
-      .withColumn("_ema_12", avg(close).over(w.rowsBetween(-11, 0)))
-      .withColumn("_ema_26", avg(close).over(w.rowsBetween(-25, 0)))
-      .withColumn("macd", col("_ema_12") - col("_ema_26"))
-    d = d.withColumn("signal_line", avg(col("macd")).over(w.rowsBetween(-8, 0)))
-      .withColumn("macd_histogram", col("macd") - col("signal_line"))
-      .withColumn("bb_middle", avg(close).over(w.rowsBetween(-19, 0)))
-      .withColumn("_bb_stddev", stddev(close).over(w.rowsBetween(-19, 0)))
-      .withColumn("bb_upper", col("bb_middle") + (col("_bb_stddev") * lit(2)))
-      .withColumn("bb_lower", col("bb_middle") - (col("_bb_stddev") * lit(2)))
-      .withColumn("_prev_close", lag(close, 1).over(w))
-      .withColumn("_price_change", close - col("_prev_close"))
-      .withColumn("_gain", when(col("_price_change") > 0, col("_price_change")).otherwise(0))
-      .withColumn("_loss", when(col("_price_change") < 0, -col("_price_change")).otherwise(0))
-      .withColumn("_avg_gain", avg("_gain").over(w.rowsBetween(-13, 0)))
-      .withColumn("_avg_loss", avg("_loss").over(w.rowsBetween(-13, 0)))
-      .withColumn("_rs", when(col("_avg_loss") =!= 0, col("_avg_gain") / col("_avg_loss")).otherwise(lit(100)))
-      .withColumn("rsi", lit(100) - (lit(100) / (lit(1) + col("_rs"))))
-      .withColumn("_volume_sign",
-        when(col("_price_change") > 0, col("volume"))
-          .when(col("_price_change") < 0, -col("volume"))
-          .otherwise(0))
-      .withColumn("obv", sum("_volume_sign").over(w.rowsBetween(Window.unboundedPreceding, 0)))
-      .withColumn("day_change_pct", (close - col("_prev_close")) / col("_prev_close") * 100)
-      .withColumn("_prev_5d_close", lag(close, 5).over(w))
-      .withColumn("week_change_pct",
-        when(col("_prev_5d_close").isNotNull,
-          (close - col("_prev_5d_close")) / col("_prev_5d_close") * 100)
-          .otherwise(lit(0)))
-      .withColumn("_prev_20d_close", lag(close, 20).over(w))
-      .withColumn("month_change_pct",
-        when(col("_prev_20d_close").isNotNull,
-          (close - col("_prev_20d_close")) / col("_prev_20d_close") * 100)
-          .otherwise(lit(0)))
-    // drop exactly the temp columns this function created — a blanket
-    // underscore-prefix drop would eat caller-owned bookkeeping columns
-    d = d.drop("_ema_12", "_ema_26", "_bb_stddev", "_prev_close",
-      "_price_change", "_gain", "_loss", "_avg_gain", "_avg_loss", "_rs",
-      "_volume_sign", "_prev_5d_close", "_prev_20d_close")
-    // typed-null padding + double cast (`etl_job.py:338-349`, E8)
-    indicatorCols.foldLeft(d) { (acc, c) =>
-      if (acc.columns.contains(c)) acc.withColumn(c, col(c).cast(DoubleType))
-      else acc.withColumn(c, lit(null).cast(DoubleType))
-    }
+    def pct(prev: Column): Column = (close - prev) / prev * 100
+    val rs = when(f("avg_loss") =!= 0, f("avg_gain") / f("avg_loss")).otherwise(lit(100))
+    df.withColumn(st, org.apache.spark.sql.graftnative.IndicatorFunctions
+        .indicator_state(close, col("volume"))
+        .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .withColumns(ListMap(
+        "sma_5" -> f("sma_5"),
+        "sma_20" -> f("sma_20"),
+        "sma_50" -> f("sma_50"),
+        "sma_200" -> f("sma_200"),
+        "macd" -> f("macd"),
+        "signal_line" -> f("signal_line"),
+        "macd_histogram" -> (f("macd") - f("signal_line")),
+        "bb_middle" -> f("sma_20"),
+        "bb_upper" -> (f("sma_20") + (f("stddev_20") * lit(2))),
+        "bb_lower" -> (f("sma_20") - (f("stddev_20") * lit(2))),
+        "rsi" -> (lit(100) - (lit(100) / (lit(1) + rs))),
+        "obv" -> f("obv").cast(DoubleType),
+        "day_change_pct" -> pct(f("lag_1")),
+        "week_change_pct" ->
+          when(f("lag_5").isNotNull, pct(f("lag_5"))).otherwise(lit(0)),
+        "month_change_pct" ->
+          when(f("lag_20").isNotNull, pct(f("lag_20"))).otherwise(lit(0))))
+      .drop(st)
   }
 
   /** Chunked overlap-and-trim indicator pipeline — the 100 TB skew
@@ -111,9 +108,9 @@ object Indicators {
     *     chunk indices are densified per symbol so gaps don't break
     *     adjacency (the dense-rank runs on the tiny distinct chunk set);
     *  2. the last `maxFrame−1` rows of each chunk are CLONED into the next
-    *     chunk as warm-up context, so every bounded ROWS frame (longest:
-    *     SMA-200, and the nested macd→signal chain of depth 33) sees its
-    *     full lookback;
+    *     chunk as warm-up context, so every bounded lookback (longest:
+    *     SMA-200, and the nested macd→signal chain of depth 33) is
+    *     complete;
     *  3. indicators run windowed by (symbol, chunk) — bounded partitions —
     *     and warm-up rows are trimmed from the output;
     *  4. OBV, the one unbounded running sum, decomposes into a chunk-local

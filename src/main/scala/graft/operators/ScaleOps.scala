@@ -2549,15 +2549,22 @@ object ScaleOps {
     * materialized ONCE and reused every round, so each iteration is one
     * equi-join of edges against the (node, rank) frame, one partial+final
     * aggregation on dst, and one left join back to nodes — shuffle volume
-    * per round is O(|edges|) with map-side combine, nothing is ever
-    * collected to the driver, and each round's rank frame is eagerly
-    * checkpointed to truncate lineage (else round k re-executes rounds
-    * 1..k−1 — and the upstream candidate-generation pipeline — per
-    * action). `checkpointDir` round-trips rounds through parquet instead
-    * of executor-local blocks, the cluster-durable fork documented on
-    * [[connectedComponents]]; on a real cluster you would additionally
-    * bucket the edge list by `src` so the per-round join never reshuffles
-    * the (static) big side.
+    * per round is O(|edges|) with map-side combine, and nothing is ever
+    * collected to the driver. The node and edge frames are checkpointed
+    * once, so no round replays the upstream candidate-generation
+    * pipeline. `checkpointDir` round-trips every round through parquet,
+    * the cluster-durable fork documented on [[connectedComponents]]; on a
+    * real cluster you would additionally bucket the edge list by `src` so
+    * the per-round join never reshuffles the (static) big side.
+    *
+    * Lineage in local mode (no `checkpointDir`): rounds are unrolled into
+    * one plan, and `localCheckpoint` cuts it only at rounds that are
+    * multiples of [[UnrollBatch]] and below `iterations`. The returned
+    * frame therefore carries its last `(iterations − 1) % UnrollBatch + 1`
+    * rounds — between 1 and UnrollBatch, all of them when `iterations` ≤
+    * UnrollBatch — as uncut lineage, and every action on it re-executes
+    * those rounds from the last cut. Persist or checkpoint the result
+    * before acting on it more than once.
     */
   def pageRankFixedPoint(nodes: DataFrame, edges: DataFrame,
       nodeCol: String = "node", srcCol: String = "src",

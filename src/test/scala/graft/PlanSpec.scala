@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{InputAdapter, ProjectExec, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, CartesianProductExec}
@@ -9,7 +9,7 @@ import org.apache.spark.sql.execution.window.WindowExec
 
 /** Physical-plan shape assertions — the 100 TB design contract:
   * filters/projections reach the parquet scan, small dims broadcast,
-  * window specs share WindowExec nodes, nothing cartesian except the
+  * indicator windows plan to one WindowExec, nothing cartesian except the
   * intentional tiny-query-side ANN cross join.
   */
 class PlanSpec extends SparkSpec {
@@ -62,17 +62,31 @@ class PlanSpec extends SparkSpec {
     assert(bhj.size == 2, s"expected 2 broadcast joins, got ${bhj.size}")
   }
 
-  test("indicator pipeline shares WindowExec nodes across same-frame functions") {
+  test("indicator pipeline plans to exactly one WindowExec, arithmetic in codegen") {
     val df = SparkEntry.entry(spark)
     val p = physical(df)
     val windows = collectAll(p) { case w: WindowExec => w }
-    // 15 indicator expressions collapse into a handful of WindowExec nodes
-    // (one per distinct frame spec), not one per withColumn
-    assert(windows.nonEmpty && windows.size <= 6,
-      s"expected <=6 WindowExec nodes, got ${windows.size}")
-    // and they all share ONE exchange (same partitioning by symbol)
+    // the native indicator kernel computes every frame-dependent value of
+    // the 15 indicators in ONE window aggregate over one running frame
+    assert(windows.size == 1, s"expected exactly 1 WindowExec, got ${windows.size}")
+    // one exchange for the symbol partitioning (plus at most the scan fan-out)
     val exchanges = dataExchanges(p)
     assert(exchanges.size <= 2, s"expected <=2 exchanges, got ${exchanges.size}")
+    // the struct-field reads and row-local arithmetic above the window run
+    // in a whole-stage-codegen Project (checked on the non-adaptive plan,
+    // where codegen stages are collapsed up front)
+    val aqe = "spark.sql.adaptive.enabled"
+    val before = spark.conf.get(aqe)
+    val codegenProjectOverWindow = try {
+      spark.conf.set(aqe, "false")
+      SparkEntry.entry(spark).queryExecution.executedPlan.collect {
+        case wsc: WholeStageCodegenExec => wsc.child.collect {
+          case ProjectExec(_, InputAdapter(_: WindowExec)) => true
+        }
+      }.flatten
+    } finally spark.conf.set(aqe, before)
+    assert(codegenProjectOverWindow.size == 1,
+      "expected one codegen'd Project directly over the WindowExec")
   }
 
   test("no unintentional cartesian or nested-loop joins anywhere in the inventory") {

@@ -13,6 +13,17 @@ class StreamingSpec extends SparkSpec {
   private def msg(ticker: String, date: String, close: Double): String =
     s"""{"ticker":"$ticker","date":"$date","open":$close,"high":$close,"low":$close,"close":$close,"volume":10,"timestamp":"$date 00:00:00"}"""
 
+  test("streamStateSession falls back to min(8, parallelism) when the size probe fails") {
+    val cap = spark.sparkContext.defaultParallelism
+    // the probed table does not exist under this directory: getContentSummary throws
+    val missing = Files.createTempDirectory("graft_no_tables").toString
+    val failed = QueriesMeta.streamStateSession(spark, missing, "events")
+    assert(failed.conf.get("spark.sql.shuffle.partitions") == math.min(8, cap).toString)
+    // a successful probe still sizes from the bytes: sf0.001 events is one partition's worth
+    val probed = QueriesMeta.streamStateSession(spark, sf0001, "events")
+    assert(probed.conf.get("spark.sql.shuffle.partitions") == "1")
+  }
+
   test("S8 decode: parse, drop ticker-less messages, stamp consumed_at") {
     val raw = Seq(msg("AAPL", "2024-01-01", 10.5), """{"noticker":1}""", "not json")
       .toDF("value")
