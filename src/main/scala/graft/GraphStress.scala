@@ -57,6 +57,10 @@ object GraphStress {
       .config("spark.sql.optimizer.excludedRules", GraftSession.ExcludedRules)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // keep the engine's own decision records (`graph-path op=... path=...`)
+    // in the probe's output: they say which branch each op measured
+    org.apache.logging.log4j.core.config.Configurator.setLevel("graft",
+      org.apache.logging.log4j.Level.INFO)
 
     // chain i -> i+1 (long diameter) + hub i -> i % hubs (heavy skew);
     // self-loops from the hub rule are dropped by the operators

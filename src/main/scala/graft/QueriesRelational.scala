@@ -450,8 +450,10 @@ object QueriesRelational {
   // synchronous variant, so the oracle can replay the unrolled rounds
   // (neighbor-label frequency argmax per node per round) and the full
   // community assignment hash-matches, not just summary stats. Four
-  // bounded rounds; the convergence-loop form at scale reuses the CC
-  // iteration harness.
+  // bounded rounds; this graph's adjacency is far under
+  // ScaleOps.DriverGraphEdgeCap, so they run on the driver after the one
+  // probe job that materializes the adjacency (above the cap they run as
+  // distributed join/aggregate rounds, with the same answer).
   private val labelPropIterations = 4
   private val labelPropQ = Q(
     (s, dir) => {

@@ -217,34 +217,77 @@ class PropertySpec extends SparkSpec {
   }
 
   test("labelPropagation equals the reference synchronous min-tie-break rounds") {
-    samples(graphGen, 8).foreach { es =>
-      // DEDUPED undirected adjacency — multi-edges don't multi-vote,
-      // matching the operator's distinct edge normalization
+    import graft.operators.ScaleOps
+    // reference: synchronous rounds over the DEDUPED undirected adjacency
+    // (multi-edges don't multi-vote, self-loops and null endpoints drop
+    // out), label := most frequent neighbor label, ties to the smallest;
+    // a node's own label does not vote
+    def reference(es: Seq[(Long, Long)], iterations: Int): Map[Long, Long] = {
       val adj = es.flatMap { case (u, v) => Seq((u, v), (v, u)) }
         .filter { case (u, v) => u != v }.toSet
         .groupBy((p: (Long, Long)) => p._1)
         .view.mapValues(_.map(_._2).toList).toMap
-      if (adj.nonEmpty) {
-        val iterations = 4
-        val got = graft.operators.ScaleOps
-          .labelPropagation(es.toDF("src", "dst"), iterations)
-          .as[(Long, Long)].collect().toMap
-        // reference: synchronous rounds, label := most frequent neighbor
-        // label, ties to the smallest; a node's own label does not vote
-        var ref = adj.keys.map(n => n -> n).toMap
-        for (_ <- 1 to iterations) {
-          ref = ref.map { case (n, _) =>
-            val freq = adj(n).map(ref).groupBy(identity)
-              .view.mapValues(_.size).toMap
-            n -> freq.toSeq.minBy { case (l, c) => (-c, l) }._1
-          }
+      var ref = adj.keys.map(n => n -> n).toMap
+      for (_ <- 1 to iterations) {
+        ref = ref.map { case (n, _) =>
+          val freq = adj(n).map(ref).groupBy(identity)
+            .view.mapValues(_.size).toMap
+          n -> freq.toSeq.minBy { case (l, c) => (-c, l) }._1
         }
-        assert(got == ref, s"edges=$es")
-        // every community label is one of its members' ids
-        val members = got.groupBy(_._2).map { case (l, m) => l -> m.keySet }
-        members.foreach { case (l, _) => assert(got.contains(l)) }
       }
+      ref
     }
+    // the public operator (driver path at these sizes), the driver kernel
+    // and the distributed rounds labelPropagation runs above the edge cap
+    // must each give the reference labels
+    def check(edges: org.apache.spark.sql.DataFrame,
+        ref: Map[Long, Long], iterations: Int, clue: String): Unit = {
+      val got = ScaleOps.labelPropagation(edges, iterations)
+      assert(got.schema.map(f => (f.name, f.dataType)) ==
+        Seq(("node", org.apache.spark.sql.types.LongType),
+          ("label", org.apache.spark.sql.types.LongType)), clue)
+      assert(got.as[(Long, Long)].collect().toMap == ref, s"operator $clue")
+      val (und, nEdges) = ScaleOps.lpaAdjacency(edges, "src", "dst")
+      val rows = und.collect()
+      assert(nEdges == rows.length.toLong, clue)
+      val (nodes, labels) = ScaleOps.lpaLocalRounds(rows.map(_.getLong(0)),
+        rows.map(_.getLong(1)), iterations)
+      assert(nodes.toSeq == nodes.sorted.toSeq, clue)
+      assert(nodes.zip(labels).toMap == ref, s"driver kernel $clue")
+      assert(ScaleOps.lpaDistributedRounds(und, iterations)
+        .as[(Long, Long)].collect().toMap == ref, s"distributed $clue")
+      // every community label is one of its members' ids
+      ref.values.foreach(l => assert(ref.contains(l), clue))
+    }
+    samples(graphGen, 8).zipWithIndex.foreach { case (es, i) =>
+      // every graph over 4 rounds; the first two also at 0 rounds, where
+      // each node keeps its own id
+      for (iterations <- if (i < 2) Seq(4, 0) else Seq(4))
+        check(es.toDF("src", "dst"), reference(es, iterations), iterations,
+          s"iterations=$iterations edges=$es")
+    }
+    // self-loops and duplicate edges in both directions
+    val dupes = Seq((1L, 1L), (1L, 2L), (2L, 1L), (1L, 2L), (2L, 3L),
+      (3L, 3L), (3L, 4L), (4L, 1L), (4L, 1L))
+    check(dupes.toDF("src", "dst"), reference(dupes, 3), 3, "dupes")
+    // rows with a null endpoint carry no edge
+    val withNulls = Seq[(Option[Long], Option[Long])]((Some(1L), Some(2L)),
+      (None, Some(2L)), (Some(3L), None), (None, None), (Some(2L), Some(3L)),
+      (Some(3L), Some(4L)))
+    check(withNulls.toDF("src", "dst"),
+      reference(withNulls.collect { case (Some(u), Some(v)) => (u, v) }, 2),
+      2, "nulls")
+    // Int-typed id columns widen to long
+    val ints = Seq((1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (5, 6), (6, 4))
+    check(ints.toDF("src", "dst"),
+      reference(ints.map { case (u, v) => (u.toLong, v.toLong) }, 4), 4, "ints")
+    // ids near Long.MaxValue: the distributed argmax negates labels
+    val big = Long.MaxValue
+    val bigEs = Seq((big, big - 1), (big - 1, big - 2), (big - 2, big),
+      (big - 2, big - 3), (big - 3, 0L))
+    check(bigEs.toDF("src", "dst"), reference(bigEs, 4), 4, "near max")
+    // an empty edge frame labels nothing
+    check(Seq.empty[(Long, Long)].toDF("src", "dst"), Map.empty, 4, "empty")
   }
 
   test("ssspWeighted equals reference bounded Bellman-Ford on random graphs") {
